@@ -363,8 +363,9 @@ object Bench {
     // caps are no-ops (QueryCatalogSpec pins that), so driver BENCH
     // artifacts are unaffected. Full-corpus decade numbers for these
     // operators live in SCALE.md's probe ladders.
+    val cappedNames = graft.queries.QueryCatalog.defs.filter(_.cap.isDefined).map(_.name).toSet
     val capped = results.keysIterator
-      .filter(graft.queries.QueryCatalog.cappedQueries)
+      .filter(cappedNames)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // Self-labeling (VERDICT r18 #2): `settled` = all four calibration
     // legs inside the pinned idle bands — an artifact from a contended

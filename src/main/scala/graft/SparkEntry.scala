@@ -1,10 +1,11 @@
 package graft
 
-import graft.queries.QueryCatalog
+import graft.queries.{QueryCatalog, SearchQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * The real catalog lives in [[graft.queries.QueryCatalog]].
+/** Driver contract — see SURVEY.md §7.
+  * Every map and set here derives from the one catalog list,
+  * [[graft.queries.QueryCatalog.defs]].
   */
 object SparkEntry {
 
@@ -13,36 +14,32 @@ object SparkEntry {
     * smoke-checks rows > 0.
     */
   def entry(spark: SparkSession): DataFrame =
-    QueryCatalog.qPipelineE2E(spark, "/root/testdata/sf0.001")
+    QueryCatalog.byName("q_pipeline_e2e").plan(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    QueryCatalog.queries
+    QueryCatalog.defs.map(d => d.name -> d.plan).toMap
 
   /** Load-side preparation (IVF index build + cache) for a
     * scale-factor dir — the work the reference does at insert time.
     * Benchmarks run this before the timing loop.
     */
   def prepare(spark: SparkSession, sfDir: String): Unit =
-    QueryCatalog.prepare(spark, sfDir)
+    SearchQueries.prepare(spark, sfDir)
 
   /** Rows that read the prepared in-memory index artifacts — Bench
-    * re-pins cache residency before timing these (see
-    * QueryCatalog.indexBackedQueries).
+    * re-pins cache residency before timing these.
     */
-  def indexBackedQueries: Set[String] = QueryCatalog.indexBackedQueries
+  def indexBackedQueries: Set[String] =
+    QueryCatalog.defs.filter(_.indexBacked).map(_.name).toSet
 
   /** Re-materialize evicted index-cache blocks; returns whether the
     * caches were already fully resident.
     */
   def ensureIndexCaches(spark: SparkSession, sfDir: String): Boolean =
-    QueryCatalog.ensureIndexCaches(spark, sfDir)
+    SearchQueries.ensureIndexCaches(spark, sfDir)
 
-  /** DuckDB-equivalent SQL for every SQL-expressible query; the
-    * remainder (hash-seeded MinHash/SimHash, KMeans IVF, the recursive
-    * chunker, the end-to-end pipeline) get rows-only checks and are
-    * covered by ScalaTest instead.
-    */
+  /** DuckDB-equivalent SQL for every catalog query. */
   def oracleSql: Map[String, String] =
-    QueryCatalog.oracleSql
+    QueryCatalog.defs.map(d => d.name -> d.oracleSql).toMap
 }

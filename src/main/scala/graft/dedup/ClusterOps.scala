@@ -38,25 +38,7 @@ private[dedup] trait ClusterOps extends Serializable {
       idACol: String = "id_a",
       idBCol: String = "id_b",
       maxIter: Int = 25
-  ): DataFrame =
-    nearDupClustersWithRounds(pairs, idACol, idBCol, maxIter)._1
-
-  /** [[nearDupClusters]] plus the number of contraction rounds
-    * EXECUTED — the loop is eager (per-round localCheckpoint + count),
-    * so the count is known by return time. Convergence is detected by
-    * a round producing no change, so the returned count always
-    * includes that final fixpoint-confirming identity round (≥ 1 even
-    * for an input already at the fixpoint); productive contractions =
-    * rounds − 1. Probes use it to verify the O(log n) claim at decade
-    * scale (SCALE.md); the DataFrame result is identical to
-    * [[nearDupClusters]]'s.
-    */
-  def nearDupClustersWithRounds(
-      pairs: DataFrame,
-      idACol: String = "id_a",
-      idBCol: String = "id_b",
-      maxIter: Int = 25
-  ): (DataFrame, Int) = {
+  ): DataFrame = {
     // closed-neighborhood minimum per node over the undirected edge set
     def withMins(e: DataFrame): DataFrame = {
       val nbrs = e
@@ -127,11 +109,10 @@ private[dedup] trait ClusterOps extends Serializable {
           "O(log n) rounds, so this indicates a pathological input; raise maxIter")
     // fixpoint = per-component stars around the min id: every non-min
     // node carries exactly one (node → min) edge; centers label themselves
-    val labeled = edges
+    edges
       .select(col("a").as("id"), col("b").as("cluster_id"))
       .unionByName(edges.select(col("b").as("id"), col("b").as("cluster_id")))
       .distinct()
-    (labeled, iter)
   }
 
   /** Keep-one-per-cluster dedup: drop every row whose id belongs to a

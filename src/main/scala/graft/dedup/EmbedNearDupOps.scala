@@ -54,7 +54,8 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
     * outgrows L3 (~4k × 1024-dim doubles = 32 MB at the adaptive
     * width's default target) the loop turns DRAM-bound — per-pair cost
     * grew 6× from sf10 to sf100 (pairs 3.18e8 → 4.37e9 = 13.7×,
-    * runtime 82×; LshSkewProbe ruled out occupancy skew: 512/512
+    * runtime 82×; LshSkewProbe — BASELINE.md, probe source at commit
+    * a311a59 — ruled out occupancy skew: 512/512
     * buckets, Σpairs only 1.12× the uniform expectation). Tiles of 128
     * rows (two ~1 MB tile sides, L2-resident) cut vector re-streaming
     * by the tile height; the visit order changes but the visited pair

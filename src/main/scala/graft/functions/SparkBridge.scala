@@ -69,4 +69,11 @@ object GraftBridge {
     */
   def applyInjectedFunctions(spark: SparkSession, ext: SparkSessionExtensions): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
+
+  /** Block until every event posted so far, including
+    * QueryExecutionListener callbacks, has been delivered (the
+    * listener bus is private[spark]).
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * faiss IMI / two-level-IVF training recipe, and the scale fix for
   * the k ∝ n clustering the SemDeDup path needs: flat Lloyd costs
   * n·k distance evaluations per iteration, which is n²/TARGET once k
-  * grows with the corpus (tools/SemDedupProbe measured the flat MLlib
+  * grows with the corpus (SemDedupProbe — SCALE.md, probe source at
+  * commit a311a59 — measured the flat MLlib
   * fit going 3.4 s → 78 s across the sf1→sf10 decade, fit-dominated).
   * Training √k coarse cells first and then √k sub-centroids WITHIN
   * each cell costs n·√k per level — and assignment at use time is

@@ -40,7 +40,8 @@ object ProductQuant {
     * is scale-free, but the number of DISTRACTORS whose ADC score
     * beats a true neighbor's grows linearly with n — so a fixed
     * shortlist's recall collapses as the corpus grows past the size it
-    * was tuned on. Measured (tools/PqProbe, m=16 ksub=256, 5 query
+    * was tuned on. Measured (PqProbe — BASELINE.md, probe source at
+    * commit a311a59 — m=16 ksub=256, 5 query
     * vectors): at 200k vectors shortlist=100 holds recall@10 = 10/10;
     * at 2M the same 100 collapses to 0–3/10 while n/2000 = 1000
     * restores 10/10 on every probe. Same adaptive-knob pattern as

@@ -9,8 +9,8 @@ import java.util.regex.{Matcher, Pattern}
   * Why: every stage pattern opens with a guard alternation
   * (`(^|[^0-9])…`) that java.util.regex cannot derive a start-set
   * from, so `replaceAll` attempts the full NFA at almost every input
-  * position — measured ~59 ns/char on the bench corpus (tools/PiiProbe,
-  * tools/PiiSpin), and the attempt loop is also where the probe's
+  * position — measured ~59 ns/char on the bench corpus (PiiProbe and
+  * PiiSpin, BASELINE.md; probe source at commit a311a59), and the attempt loop is also where the probe's
   * concurrency ceiling lives. But a successful match constrains its
   * first characters hard:
   *

@@ -37,7 +37,7 @@ object QueryProfile {
     require(args.length >= 3, "usage: QueryProfile <sfDir> <iters> <query...>")
     val sfDir = args(0)
     val iters = args(1).toInt
-    val names = args.drop(2).toSeq
+    val defs = QueryCatalog.resolve(args.drop(2).toSeq)
     val cpus = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt).getOrElse(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -73,14 +73,14 @@ object QueryProfile {
       }
     }
 
-    QueryCatalog.prepare(spark, sfDir)
+    graft.SparkEntry.prepare(spark, sfDir)
     // GRAFT_PROFILE_NOLISTENER=1 drops the stage listener — a control
     // for checking the listener itself isn't distorting the walls.
     if (!sys.env.get("GRAFT_PROFILE_NOLISTENER").contains("1"))
       spark.sparkContext.addSparkListener(listener)
 
-    names.foreach { n =>
-      val fn = QueryCatalog.queries.getOrElse(n, sys.error(s"unknown query: $n"))
+    defs.foreach { d =>
+      val (n, fn) = (d.name, d.plan)
       // warm (JIT/codegen/footers) — untimed. GRAFT_PROFILE_NOWARM=1
       // skips it so iteration 1 shows the first-touch-at-this-sf cost
       // (attempt-1-vs-2 asymmetry diagnosis).

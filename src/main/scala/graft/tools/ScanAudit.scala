@@ -24,7 +24,8 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else QueryCatalog.queries.keys.toSeq.sorted
+    val defs = QueryCatalog.resolve(
+      if (args.length > 1) args.tail.toSeq else QueryCatalog.defs.map(_.name).sorted)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -49,27 +50,26 @@ object ScanAudit {
       here + p.children.map(reuses).sum + p.subqueries.map(reuses).sum
     }
 
-    names.foreach { n =>
-      QueryCatalog.queries.get(n).foreach { fn =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.executedPlan
-          val byPath = scans(plan).groupBy(f =>
-            f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?"))
-          val nReuse = reuses(plan)
-          val dups = byPath.filter(_._2.size > 1)
-          if (dups.isEmpty) {
-            println(f"[scanaudit] $n%-28s ok    scans=${byPath.values.map(_.size).sum} reuse=$nReuse")
-          } else {
-            dups.toSeq.sortBy(_._1).foreach { case (path, ss) =>
-              val cols = ss.map(_.output.map(_.name).toSet)
-              val subsumed = cols.combinations(2).exists(p => p(0).subsetOf(p(1)) || p(1).subsetOf(p(0)))
-              val tag = if (subsumed) "PRUNE?" else "multi "
-              println(f"[scanaudit] $n%-28s $tag path=$path x${ss.size} reuse=$nReuse cols=${cols.map(_.toSeq.sorted.mkString("(", ",", ")")).mkString(" vs ")}")
-            }
+    defs.foreach { d =>
+      val n = d.name
+      try {
+        val df = d.plan(spark, sfDir)
+        val plan = df.queryExecution.executedPlan
+        val byPath = scans(plan).groupBy(f =>
+          f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?"))
+        val nReuse = reuses(plan)
+        val dups = byPath.filter(_._2.size > 1)
+        if (dups.isEmpty) {
+          println(f"[scanaudit] $n%-28s ok    scans=${byPath.values.map(_.size).sum} reuse=$nReuse")
+        } else {
+          dups.toSeq.sortBy(_._1).foreach { case (path, ss) =>
+            val cols = ss.map(_.output.map(_.name).toSet)
+            val subsumed = cols.combinations(2).exists(p => p(0).subsetOf(p(1)) || p(1).subsetOf(p(0)))
+            val tag = if (subsumed) "PRUNE?" else "multi "
+            println(f"[scanaudit] $n%-28s $tag path=$path x${ss.size} reuse=$nReuse cols=${cols.map(_.toSeq.sorted.mkString("(", ",", ")")).mkString(" vs ")}")
           }
-        } catch { case e: Throwable => println(s"[scanaudit] $n FAILED: ${e.getMessage}") }
-      }
+        }
+      } catch { case e: Throwable => println(s"[scanaudit] $n FAILED: ${e.getMessage}") }
     }
     spark.stop()
   }

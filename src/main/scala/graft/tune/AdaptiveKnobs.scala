@@ -46,7 +46,8 @@ object AdaptiveKnobs {
     * 1/2000 fraction of n, floored at max(100, 5k). Quantization error
     * is scale-free but the number of distractors whose ADC score beats
     * a true neighbor's grows linearly with n — so the shortlist must
-    * too. Measured anchors (tools/PqProbe, m=16 ksub=256): 200k → 100
+    * too. Measured anchors (PqProbe — BASELINE.md, probe source at
+    * commit a311a59 — m=16 ksub=256): 200k → 100
     * holds recall@10 = 10/10; at 2 M the fixed 100 collapses to 0–3/10
     * while n/2000 = 1000 restores 10/10 on every probe.
     */

@@ -42,29 +42,6 @@ class DedupSpec extends SparkTestBase {
     ))
   }
 
-  test("line dedup reuse knob: one scan through the persisted aggregate, same rows") {
-    // VERDICT r3 #6: by default the (doc,line) aggregate is recomputed
-    // for both branches (documented 100 TB trade); reuse=true persists
-    // it so the scan+explode runs once. Same output either way.
-    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    def run(reuse: Boolean) = Dedup.lineDedupStats(docs, "doc_id", "text", reuse)
-    val expected = run(reuse = false).orderBy("doc_id").collect().toSeq
-    val reused = run(reuse = true)
-    try {
-      val plan = reused.queryExecution.executedPlan.toString
-      // Both branches must read the cache, and every parquet scan in
-      // the plan string must be the cached relation's (printed once
-      // per InMemoryTableScan) build plan — not a live rescan. The
-      // build plan executes once, on first materialization.
-      val cacheReads = "InMemoryTableScan".r.findAllIn(plan).size
-      val cachedRels = "InMemoryRelation".r.findAllIn(plan).size
-      val fileScans = "Scan parquet".r.findAllIn(plan).size
-      assert(cacheReads >= 2, s"expected both branches cached with reuse=true:\n$plan")
-      assert(fileScans <= cachedRels, s"live parquet rescan outside the cache:\n$plan")
-      assert(reused.orderBy("doc_id").collect().toSeq == expected)
-    } finally spark.catalog.clearCache()
-  }
-
   // Live vs reused shuffle exchanges of the non-AQE physical plan.
   // AQE's initial plan hides EnsureRequirements exchanges (they are
   // inserted during stage preparation) and applies reuse only at

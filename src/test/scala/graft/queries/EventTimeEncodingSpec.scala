@@ -145,11 +145,11 @@ class EventTimeEncodingSpec extends SparkTestBase {
   private def sorted(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.mkString("\u0000"))
 
-  private val family: Seq[(String, QueryCatalog.Q)] = Seq(
-    "q_events_hourly" -> QueryCatalog.qEventsHourly,
-    "q_sessionize" -> QueryCatalog.qSessionize,
-    "q_asof_join" -> QueryCatalog.qAsofJoin,
-    "q_interval_join" -> QueryCatalog.qIntervalJoin
+  private val family: Seq[(String, Q)] = Seq(
+    "q_events_hourly" -> RelationalQueries.qEventsHourly,
+    "q_sessionize" -> RelationalQueries.qSessionize,
+    "q_asof_join" -> RelationalQueries.qAsofJoin,
+    "q_interval_join" -> RelationalQueries.qIntervalJoin
   )
 
   test("all four event-time queries return identical rows over all four ts encodings") {
@@ -163,7 +163,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   test("hourly buckets carry every event exactly once, at true epoch hours") {
-    val hourly = QueryCatalog.qEventsHourly(spark, dirs("us")).collect()
+    val hourly = RelationalQueries.qEventsHourly(spark, dirs("us")).collect()
     assert(hourly.map(_.getAs[Long]("n_events")).sum == rows.size)
     // buckets are whole UTC hours within the fixture's span
     val hours = hourly.map(_.getAs[Long]("hour_epoch"))
@@ -171,7 +171,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   test("sessionize splits on the >30-min gaps the fixture plants") {
-    val sess = QueryCatalog.qSessionize(spark, dirs("us"))
+    val sess = RelationalQueries.qSessionize(spark, dirs("us"))
       .filter(col("user_id") === 1).collect().sortBy(_.getAs[Long]("session_id"))
     assert(sess.map(_.getAs[Long]("session_id")).toSeq == Seq(1L, 2L, 3L))
     assert(sess.map(_.getAs[Long]("n_events")).toSeq == Seq(3L, 3L, 1L))
@@ -181,7 +181,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   test("asof join picks the latest click at-or-before each purchase, null when none") {
-    val asof = QueryCatalog.qAsofJoin(spark, dirs("us")).collect()
+    val asof = RelationalQueries.qAsofJoin(spark, dirs("us")).collect()
       .map(r => r.getAs[Long]("event_id") -> r).toMap
     // user 1, purchase at +75:59.999999 -> click at +50:00.123456 (not the later one)
     assert(asof(102L).getAs[Long]("asof_click_ts") == Base + 1 * Min + 50 * Min + 123456L)
@@ -196,15 +196,15 @@ class EventTimeEncodingSpec extends SparkTestBase {
     // fresh session state: the flag off, as in a driver-spawned session
     val ns: SparkSession = spark.newSession()
     ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val out = sorted(QueryCatalog.qAsofJoin(ns, dirs("ns")))
-    assert(out == sorted(QueryCatalog.qAsofJoin(spark, dirs("us"))))
+    val out = sorted(RelationalQueries.qAsofJoin(ns, dirs("ns")))
+    assert(out == sorted(RelationalQueries.qAsofJoin(spark, dirs("us"))))
     assert(ns.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
   test("NTZ micros normalize TZ-independently (no session-offset shift)") {
     val seoul: SparkSession = spark.newSession()
     seoul.conf.set("spark.sql.session.timeZone", "Asia/Kolkata") // non-whole-hour offset
-    val out = sorted(QueryCatalog.qSessionize(seoul, dirs("us")))
-    assert(out == sorted(QueryCatalog.qSessionize(spark, dirs("us"))))
+    val out = sorted(RelationalQueries.qSessionize(seoul, dirs("us")))
+    assert(out == sorted(RelationalQueries.qSessionize(spark, dirs("us"))))
   }
 }

@@ -13,7 +13,7 @@ class QueryCatalogSpec extends SparkTestBase {
     // The SparkEntry contract allows omitting oracleSql for
     // non-SQL-expressible ops, but the driver then records only a
     // weaker rows>0 check — a silent downgrade if the omission is an
-    // oversight rather than a decision (the cappedQueries-drift class,
+    // oversight rather than a decision (the capped-set drift class,
     // r18). Every catalog row is currently DuckDB-oracled; a genuinely
     // non-expressible future query goes in this exemption set WITH its
     // reason, so the downgrade is a reviewed decision.
@@ -169,28 +169,64 @@ class QueryCatalogSpec extends SparkTestBase {
   test("replica-0-capped rows push the doc_id cap into the parquet scan (r14)") {
     // the cap exists so the sf100 graded slice stays fixed-density; if
     // it ever stops reaching the scan (e.g. slipped above a
-    // repartition), every decade pays a full-corpus read again
-    // q_dedup_clusters and q_search_facade are capped too but end in
-    // checkpoints (star-contraction rounds / the batch-search bracket),
-    // so their FINAL plans are Scan ExistingRDD — the cap's pushdown
-    // there is the same filter-before-rebalance pattern, certified by
-    // their oracles' row counts instead
-    for (name <- Seq("q_scrub_spans", "q_simhash", "q_simhash_fast",
-      "q_ngram_jaccard", "q_minhash_lsh", "q_pipeline_e2e",
-      "q_chunk_recursive", "q_chunk_semantic",
-      "q_repetition", "q_gopher_full", "q_media_features")) {
-      val plan = SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
-      assert(plan.contains(s"LessThan(doc_id,${QueryCatalog.Replica0Cap})"),
-        s"$name must push the replica-0 cap to the scan (PushedFilters):\n$plan")
+    // repartition), every decade pays a full-corpus read again. Runs
+    // over every def that DECLARES a cap, so a def listed as capped
+    // whose body never slices (the stale half of the old source-scan
+    // audit) fails here too.
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, LessThan, Literal}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+    // capped defs whose FINAL plan holds no scan of the capped table:
+    // the cap is applied before a checkpoint, so the plan reads
+    // Scan ExistingRDD; their oracles' row counts certify the slice
+    val noScanExempt: Map[String, String] = Map(
+      "q_dedup_clusters" -> "star-contraction rounds end in a per-round localCheckpoint",
+      "q_search_facade" -> "the batch-search bracket checkpoints the capped corpus",
+      "q_prefix_jaccard" -> "prefixJaccardPairs checkpoints the tokenized slice and its sorted token lists")
+
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case _ => (p.children ++ p.subqueries).flatMap(scans)
     }
+
+    // a whole-table cache leaked by another suite (e.g. a cached
+    // embeddings read) would replace the file scans with in-memory
+    // reads, so plan against the on-disk tables only
+    spark.catalog.clearCache()
+    val capped = QueryCatalog.defs.filter(_.cap.isDefined)
+    assert(capped.nonEmpty)
+    val problems = capped.flatMap { d =>
+      val cap = d.cap.get
+      val onTable = scans(d.plan(spark, sf()).queryExecution.executedPlan)
+        .filter(_.relation.location.rootPaths.exists(_.getName == s"${cap.table}.parquet"))
+      val sliced = onTable.map(_.dataFilters.exists {
+        case LessThan(a: AttributeReference, Literal(v, _)) =>
+          a.name == cap.column && v != null && v.toString == cap.bound.toString
+        case _ => false
+      })
+      (onTable.isEmpty, noScanExempt.contains(d.name)) match {
+        case (true, false) => Some(s"${d.name}: no scan of ${cap.table} in the final plan (exempt it with a reason?)")
+        case (false, true) => Some(s"${d.name}: stale exemption, the final plan scans ${cap.table}")
+        case _ if sliced.contains(false) =>
+          Some(s"${d.name}: a ${cap.table} scan lacks the ${cap.sqlPredicate} data filter")
+        case _ => None
+      }
+    }
+    val unknownExempt = noScanExempt.keySet -- capped.map(_.name)
+    assert(unknownExempt.isEmpty, s"exemptions for defs that declare no cap: $unknownExempt")
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 
   test("replica-0 cap invariants: below the ScaleUp stride, above the driver-sf keys (r15)") {
     import org.apache.spark.sql.functions.max
     // cap < stride: the filter must select exactly the replica-0 family
     // at every ScaleUp decade (replicas live at key >= replica * stride)
-    assert(QueryCatalog.Replica0Cap < graft.tools.ScaleUp.DefaultKeyStride)
-    assert(QueryCatalog.Replica0CapSmall < graft.tools.ScaleUp.DefaultKeyStride)
+    val caps = QueryCatalog.defs.flatMap(_.cap).distinct
+    assert(caps.toSet == Set(Cap.Docs, Cap.DocsSmall, Cap.DocsTiny, Cap.VecsSmall, Cap.Events))
+    caps.foreach(c => assert(c.bound < graft.tools.ScaleUp.DefaultKeyStride, c))
     // cap > max driver-sf key: the no-op-at-gate property — the driver
     // compares the FULL corpus at the sfs it grades, the big sweeps a
     // fixed-density slice. sf0.1 is the largest driver corpus (5000
@@ -198,21 +234,23 @@ class QueryCatalogSpec extends SparkTestBase {
     def maxKey(table: String, key: String): Long =
       spark.read.parquet(s"/root/testdata/sf0.1/$table.parquet")
         .agg(max(key)).head().getLong(0)
-    assert(QueryCatalog.Replica0Cap > maxKey("documents", "doc_id"))
-    assert(QueryCatalog.Replica0CapSmall > maxKey("embeddings", "vec_id"))
-    // single definition site: the catalog source carries no bare cap
-    // literal that could drift from the constants on one side of an
-    // oracle pair (VERDICT r14 #1)
-    val src = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("src/main/scala/graft/queries/QueryCatalog.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // "< 500" also covers "< 5000", and guards the Replica0CapTiny
-    // value (r18 review): a reintroduced bare literal would evade
-    // CapAuditSpec's idiom scan, recreating the q_semantic_dedup
-    // labeling-drift class the named-constant family exists to prevent
-    assert(!src.contains("< 500") && !src.contains("< 2000"),
-      "bare replica-0 cap literal in QueryCatalog.scala — use " +
-        "Replica0Cap/Replica0CapSmall/Replica0CapTiny")
+    assert(Cap.Docs.bound > maxKey("documents", "doc_id"))
+    assert(Cap.VecsSmall.bound > maxKey("embeddings", "vec_id"))
+    assert(Cap.Events.bound > maxKey("events", "event_id"))
+    // single definition site: no catalog source carries a bare cap
+    // literal that could drift from the Cap values on one side of an
+    // oracle pair (VERDICT r14 #1); "< 500" also covers "< 5000"
+    val dir = new java.io.File("src/main/scala/graft/queries")
+    assert(dir.isDirectory,
+      s"scan must run from the repo root (cwd=${new java.io.File(".").getCanonicalPath})")
+    val bare = for {
+      f <- dir.listFiles.toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      lit <- Seq("< 500", "< 2000", "< 100000")
+      if src.contains(lit)
+    } yield s"${f.getName}: $lit"
+    assert(bare.isEmpty,
+      s"bare replica-0 cap literal — slice through the def's Cap instead: ${bare.mkString(", ")}")
   }
 }

@@ -54,11 +54,9 @@ class RoundingAuditSpec extends AnyFunSuite {
       Seq(
         raw"\* 100\)" -> 6,            // round(<money> * 100) → cents
         // the Column form of the same: qApproxQuantile's cents column
-        // plus QuantilePlanDump (r20), which replicates that expression
-        // verbatim to dump the internal bracket plan
-        raw"\* lit\(100\)\)" -> 2,
+        raw"\* lit\(100\)\)" -> 1,
         raw"\* 10000\)" -> 5,          // quantizations to 1e-4 units
-        raw"\* 10000, 0\)" -> 2,
+        raw"\* 10000, 0\)" -> 1,
         raw"\* lit\(10000\)\)" -> 1,   // the Column form (q3 revenue terms)
         raw"math\.round\(" -> 2,       // driver-side integer rounding
         raw"round\(quantile_cont\(CAST\(round\(" -> 2 // integer cents percentile
@@ -107,7 +105,7 @@ class RoundingAuditSpec extends AnyFunSuite {
         "such row is fixture-verified across four decades — the " +
         "round(9) vector-mean precedent documented in r13",
       Seq(
-        raw"cosineSimilarity" -> 17,
+        raw"cosineSimilarity" -> 15,
         raw"list_dot_product" -> 13,
         raw"round\(dot_product" -> 1,
         raw"stddev_pop" -> 5,
